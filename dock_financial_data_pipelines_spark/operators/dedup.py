@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import (
@@ -42,6 +42,23 @@ from dock_financial_data_pipelines_spark.session import release_local_checkpoint
 
 def _tokens():
     return F.split(F.col("text"), " ")
+
+
+def word_shingles(w: int) -> Column:
+    """Stride-1 ``w``-token shingles of the token array column ``ws`` —
+    the engine twin of the ``_MH_SHINGLES_SQL`` CTE (same 0-based
+    start range, same ' '-joined format; a doc shorter than ``w``
+    yields its whole token list as one shingle), so both engines hash
+    the same strings.
+
+    The caller projects ``ws = split(text, ' ')`` first: Spark does not
+    CSE ``split(text, ' ')`` across lambda references, so the inline
+    form re-splits the text once per shingle (O(n²) characters per
+    doc)."""
+    return F.expr(
+        f"transform(sequence(0, greatest(size(ws) - {w}, 0)),"
+        f" i -> concat_ws(' ', slice(ws, i + 1, {w})))"
+    )
 
 
 def _pairs2(c):
@@ -192,18 +209,9 @@ def minhash_signatures(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
     (shingle, family) and one shuffle on doc_id; no 64-bit multiply
     tricks, which ANSI mode — Spark 4's default — would reject on
     overflow."""
-    # Tokenize once into a projected column: Spark does not CSE
-    # `split(text,' ')` across lambda references, so the inline form
-    # re-splits the text once per shingle (O(n²) characters per doc).
     shingled = (
         docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.expr(
-                f"transform(sequence(0, greatest(size(ws) - {shingle_width}, 0)),"
-                f" i -> concat_ws(' ', slice(ws, i + 1, {shingle_width})))"
-            ).alias("shingles"),
-        )
+        .select("doc_id", word_shingles(shingle_width).alias("shingles"))
         .select("doc_id", F.explode("shingles").alias("shingle"))
     )
     mins = [
@@ -835,9 +843,17 @@ def _semantic_dedup_oracle() -> str:
     """
 
 
-@query("l_semantic_dedup", oracle=_semantic_dedup_oracle())
-def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_cell_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(cells, pairs) for the within-cell pair scan of semantic dedup:
+    cells = (vec_id, cell, e) with each embedding in its nearest IVF
+    cell; pairs = (cell, id_a, id_b, cos) for every within-cell pair
+    with id_a < id_b, cos the exact cosine in the oracle's form."""
+    import math
+
     from dock_financial_data_pipelines_spark.operators.similarity import (
+        _IVF_K,
         _dot,
         _ivf_assign,
         _ivf_train_centroids,
@@ -876,12 +892,6 @@ def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the a-side ×G replication is the standard salting price and G is
     # scale-adaptive (2 waves per core over K cells), never a local
     # constant.
-    import math
-
-    from dock_financial_data_pipelines_spark.operators.similarity import (
-        _IVF_K,
-    )
-
     g_blocks = max(
         1, math.ceil(2 * spark.sparkContext.defaultParallelism / _IVF_K)
     )
@@ -917,15 +927,24 @@ def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n_parts, "cell", "gb")
     )
     cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
-    dropped = (
+    pairs = (
         a.join(
             b,
             (a["cell"] == b["cell"]) & (F.col("tb") == F.col("gb")),
         )
         .where(F.col("id_a") < F.col("id_b"))  # within-cell pairs once
         .withColumn("cos", cos)
-        .where(F.col("cos") >= _SEM_TAU)
-        .select(a["cell"], F.col("id_b").alias("vec_id"))  # larger id drops
+        .select(a["cell"], "id_a", "id_b", "cos")
+    )
+    return cells, pairs
+
+
+@query("l_semantic_dedup", oracle=_semantic_dedup_oracle())
+def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cells, pairs = _ivf_cell_pairs(spark, sf_dir)
+    dropped = (
+        pairs.where(F.col("cos") >= _SEM_TAU)
+        .select("cell", F.col("id_b").alias("vec_id"))  # larger id drops
         .distinct()
     )
     return (
@@ -1333,17 +1352,8 @@ _AUDIT_TRUTH_J = 0.8
 )
 def l_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    ssets = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("ss"),
-        )
+    ssets = docs.select("doc_id", F.split("text", " ").alias("ws")).select(
+        "doc_id", F.array_distinct(word_shingles(3)).alias("ss")
     )
     jacc = F.size(F.array_intersect("sa", "sb")).cast("double") / F.size(
         F.array_union("sa", "sb")
@@ -1591,6 +1601,71 @@ _CONT_CAP = 64
 _CONT_MIN = 0.6
 
 
+def _shingle_postings(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, h) postings of each doc's 3-token shingles —
+    the inverted index the containment family and the stage cost model
+    count over. h is xxhash64, not the md5-60bit idiom (r15): h is
+    INTERNAL — every consumer outputs only ids and set cardinalities,
+    which are hash-invariant modulo a ~n²/2^65 collision (the
+    l_repetition_stats argument; the oracles keep md5 and the hash
+    compare would catch a divergent collision). The md5 string path
+    cost ~2x the whole index build."""
+    return (
+        docs.select("doc_id", F.split("text", " ").alias("ws"))
+        .select("doc_id", F.explode(word_shingles(3)).alias("shingle"))
+        .select("doc_id", F.expr("xxhash64(shingle)").alias("h"))
+        .distinct()
+    )
+
+
+def _capped_overlap_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a < doc_b, n_common, size_a, size_b) for every doc pair
+    sharing a df≤``_CONT_CAP`` shingle: n_common = |A∩B| and size = |A|
+    over the capped shingle universe — the candidate join behind
+    l_containment_pairs and l_wrapper_pair_audit, which each add only
+    their own threshold and output columns."""
+    sh = _shingle_postings(docs)
+    # (r14 probe note: sh's DISTINCT exchange subtree is identical under
+    # both consumers — freq and the join's left side — so Spark's
+    # ReusedExchange already evaluates the shingle explode + hash once;
+    # a pre-join checkpoint of sh measured as a wash and is deliberately
+    # not applied. capped IS materialized once — three consumers, sizes
+    # + both join sides, would otherwise re-run the shingle hashing.)
+    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
+        F.col("df") <= _CONT_CAP
+    )
+    capped = sh.join(freq.select("h"), "h").localCheckpoint(eager=True)
+    sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = capped.alias("a")
+    b = capped.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.h") == F.col("b.h"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    # r15 probe note: carrying sz through the pair join via a count
+    # window inside the checkpoint was tried and REVERTED — the window
+    # (exchange + sort of the whole capped index, paid eagerly in the
+    # materialization) cost more than the two sizes joins it removed
+    # (wrapper-audit bench median 3.36 → 4.20 s). A forced broadcast of
+    # sizes was also rejected: AQE already broadcasts the doc-count-sized
+    # frame at this SF, and at 100 TB sizes is corpus-sized — a hint
+    # would pin a plan that cannot scale.
+    sa = sizes.select(
+        F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")
+    )
+    sb = sizes.select(
+        F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")
+    )
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
 @query(
     "l_containment_pairs",
     oracle=f"""
@@ -1624,70 +1699,12 @@ _CONT_MIN = 0.6
     """,
 )
 def l_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    # ws projected once (no split-per-shingle re-tokenize; the
-    # minhash_signatures lesson) and capped materialized once — three
-    # consumers (sizes + both join sides) would otherwise re-run the
-    # shingle hashing three times.
-    sh = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
-    # (r14 probe note: unlike l_substring_span_pairs, sh's DISTINCT
-    # exchange subtree is identical under both consumers — freq and the
-    # join's left side — so Spark's ReusedExchange already evaluates
-    # the shingle explode + md5 once here; a pre-join checkpoint of sh
-    # measured as a wash and is deliberately not applied.)
-    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _CONT_CAP
-    )
-    capped = sh.join(freq.select("h"), "h").localCheckpoint(eager=True)
-    sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = capped.alias("a")
-    b = capped.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")
-    )
+    pairs = _capped_overlap_pairs(load(spark, sf_dir, "documents"))
     cont = F.col("n_common").cast("double") / F.least(
         F.col("size_a"), F.col("size_b")
     )
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(cont >= _CONT_MIN)
+        pairs.where(cont >= _CONT_MIN)
         .select(
             "doc_a",
             "doc_b",
@@ -1769,20 +1786,12 @@ def l_substring_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    # Tokenize once into a projected column (the minhash_signatures
-    # lesson, dedup.py:178): Spark does not CSE split(text,' ') across
-    # lambda references, so the inline form re-splits per shingle —
-    # O(n²) characters per doc. Measured 2.3x on this operator at sf0.1.
+    # ws projected once (see word_shingles) — measured 2.3x on this
+    # operator at sf0.1 against the inline re-split.
     pos_sh = docs.select(
         "doc_id", F.split("text", " ").alias("ws")
     ).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, greatest(size(ws) - 8, 0)),"
-                " i -> concat_ws(' ', slice(ws, i + 1, 8)))"
-            )
-        ).alias("i", "shingle"),
+        "doc_id", F.posexplode(word_shingles(8)).alias("i", "shingle")
     ).select(
         "doc_id",
         "i",
@@ -2173,26 +2182,7 @@ def _semdedup_cell_audit_oracle() -> str:
 
 @query("l_semdedup_cell_audit", oracle=_semdedup_cell_audit_oracle())
 def l_semdedup_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dock_financial_data_pipelines_spark.operators.similarity import (
-        _dot,
-        _ivf_assign,
-        _ivf_train_centroids,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",  # shared with l5_ivf_topk
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
-    cells = _ivf_assign(
-        emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("ce")),
-        centroids,
-        "ce",
-        1,
-    ).select(F.col("_id").alias("vec_id"), "cell", F.col("ce").alias("e"))
+    cells, pairs = _ivf_cell_pairs(spark, sf_dir)
 
     # Operator-side accounting (the l_semantic_dedup formulation).
     op = l_semantic_dedup(spark, sf_dir).select(
@@ -2201,58 +2191,11 @@ def l_semdedup_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Independent recount: per-vector greatest-cosine-to-smaller-id
     # flag via aggregate — no DISTINCT, no left join.
-    # Norms factored out per ROW (the l_semantic_dedup idiom: sqrt(x·x)
-    # is the same double wherever computed, so every τ decision is
-    # bit-identical) — one interpreted higher-order dot per pair, not 3.
-    normed = cells.withColumn("nrm", F.sqrt(_dot("e", "e")))
-    # Same compute-skew fix as l_semantic_dedup (r15): block-split the
-    # within-cell pair space over K·G explicit partitions so the
-    # quadratic recount isn't serialized onto K=8 tasks (or onto ONE —
-    # AQE coalesces the byte-tiny pair shuffle without the explicit
-    # count). Pair set and every τ decision are unchanged.
-    import math
-
-    from dock_financial_data_pipelines_spark.operators.similarity import (
-        _IVF_K,
-    )
-
-    g_blocks = max(
-        1, math.ceil(2 * spark.sparkContext.defaultParallelism / _IVF_K)
-    )
-    n_parts = _IVF_K * g_blocks
-    a = (
-        normed.select(
-            "cell",
-            F.col("vec_id").alias("id_a"),
-            F.col("e").alias("ea"),
-            F.col("nrm").alias("na"),
-        )
-        .withColumn(
-            "tb", F.explode(F.sequence(F.lit(0), F.lit(g_blocks - 1)))
-        )
-        .repartition(n_parts, "cell", "tb")
-    )
-    b = (
-        normed.select(
-            "cell",
-            F.col("vec_id").alias("id_b"),
-            F.col("e").alias("eb"),
-            F.col("nrm").alias("nb"),
-        )
-        .withColumn(
-            "gb", F.pmod(F.xxhash64("id_b"), F.lit(g_blocks)).cast("int")
-        )
-        .repartition(n_parts, "cell", "gb")
-    )
-    cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     flagged = (
-        a.join(
-            b,
-            (a["cell"] == b["cell"]) & (F.col("tb") == F.col("gb")),
+        pairs.withColumn(
+            "is_dup", (F.col("cos") >= F.lit(_SEM_TAU)).cast("int")
         )
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("is_dup", (cos >= F.lit(_SEM_TAU)).cast("int"))
-        .groupBy(a["cell"], F.col("id_b"))
+        .groupBy("cell", "id_b")
         .agg(F.max("is_dup").alias("dup"))
     )
     recount = (
@@ -2351,16 +2294,8 @@ def l_minhash_estimate_error_audit(
         lambda: minhash_signatures(docs).localCheckpoint(eager=True),
     )
     pairs = l4_minhash_lsh_neardup(spark, sf_dir).select("doc_a", "doc_b")
-    ssets = docs.select(
-        "doc_id", F.split("text", " ").alias("ws")
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-            )
-        ).alias("ss"),
+    ssets = docs.select("doc_id", F.split("text", " ").alias("ws")).select(
+        "doc_id", F.array_distinct(word_shingles(3)).alias("ss")
     )
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -2635,67 +2570,7 @@ def l_minhash_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l_wrapper_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    sh = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
-    # (r14 probe note: unlike l_substring_span_pairs, sh's DISTINCT
-    # exchange subtree is identical under both consumers — freq and the
-    # join's left side — so Spark's ReusedExchange already evaluates
-    # the shingle explode + md5 once here; a pre-join checkpoint of sh
-    # measured as a wash and is deliberately not applied.)
-    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _CONT_CAP
-    )
-    capped = sh.join(freq.select("h"), "h").localCheckpoint(eager=True)
-    sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = capped.alias("a")
-    b = capped.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    # r15 probe note: carrying sz through the pair join via a count
-    # window inside the checkpoint was tried and REVERTED — the window
-    # (exchange + sort of the whole capped index, paid eagerly in the
-    # materialization) cost more than the two sizes joins it removed
-    # (bench median 3.36 → 4.20 s). A forced broadcast of sizes was
-    # also rejected: AQE already broadcasts the doc-count-sized frame
-    # at this SF, and at 100 TB sizes is corpus-sized — a hint would
-    # pin a plan that cannot scale. The r14 shape stands.
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")
-    )
+    pairs = _capped_overlap_pairs(load(spark, sf_dir, "documents"))
     cont = F.col("n_common").cast("double") / F.least(
         F.col("size_a"), F.col("size_b")
     )
@@ -2704,9 +2579,7 @@ def l_wrapper_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where((cont >= 0.8) & (jac < 0.5))
+        pairs.where((cont >= 0.8) & (jac < 0.5))
         .select(
             "doc_a",
             "doc_b",
@@ -3410,29 +3283,7 @@ def l_dedup_stage_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("units"),
         )
     )
-    post = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
+    post = _shingle_postings(docs)
     cont_s = (
         post.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))

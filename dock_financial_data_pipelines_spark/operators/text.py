@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, local_frame
+from dock_financial_data_pipelines_spark.operators.dedup import word_shingles
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.session import (
     release_local_checkpoint,
@@ -1457,15 +1458,7 @@ def l_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (
         load(spark, sf_dir, "documents")
         .select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("term"),
-        )
+        .select("doc_id", F.explode(word_shingles(3)).alias("term"))
     )
     firsts = grams.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
     n_docs = load(spark, sf_dir, "documents").agg(
@@ -2236,15 +2229,7 @@ def l_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         load(spark, sf_dir, "documents")
         .select("source", F.split("text", " ").alias("ws"))
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("s"),
-        )
+        .select("source", F.explode(word_shingles(3)).alias("s"))
         .distinct()
     )
     vocab = sh.groupBy("source").agg(F.count(F.lit(1)).alias("v"))
@@ -2334,15 +2319,7 @@ def l_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         load(spark, sf_dir, "documents")
         .select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("s"),
-        )
+        .select("doc_id", F.explode(word_shingles(3)).alias("s"))
         .distinct()
     )
     df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("d"))

@@ -892,6 +892,16 @@ _LOCAL_MANIFEST_MAX_ROWS = 131072
 _LOCAL_MANIFEST_MAX_BYTES = 64 << 20
 
 
+def _footer_rows(files) -> int:
+    """Total row count of the parquet ``files`` from their footers
+    alone — the driver-side row cap is checked BEFORE any table read,
+    so it bounds the materialization (compressed parquet can decompress
+    to far more driver memory than the on-disk bytes gate implies)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p in files)
+
+
 def _local_shard_manifest(data_dir: str):
     """Per-shard manifest rows computed driver-side from the staged
     parquet files themselves (flat layout only) — bit-identical to
@@ -921,21 +931,20 @@ def _local_shard_manifest(data_dir: str):
                 total_bytes += os.path.getsize(p)
     if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
         return None
+    if _footer_rows(files) > _LOCAL_MANIFEST_MAX_ROWS:
+        return None
     # ONE threaded dataset read over the whole file list — a per-file
     # read_table loop costs ~3-5 ms of open/footer overhead per file,
     # which the small-file-debris stagers (hundreds of
     # maxRecordsPerFile files) turned into a second's worth of serial
     # driver work (measured: compact_snapshot +1.1 s on the first cut
-    # of this fold). The row cap is enforced on the materialized
-    # table: the bytes gate above already bounds the read itself.
+    # of this fold).
     if files:
         tbl = pq.ParquetDataset(files).read(
             columns=["doc_id", "tokens", "shard"], use_threads=True
         )
     else:
         tbl = None
-    if tbl is not None and tbl.num_rows > _LOCAL_MANIFEST_MAX_ROWS:
-        return None  # pragma: no cover - scale fallback
     stats: dict = {}
     if tbl is not None:
         doc_ids = tbl.column("doc_id").to_pylist()
@@ -1011,20 +1020,25 @@ def _pe_local_manifest(data_dir: str):
                 total_bytes += os.path.getsize(p)
     if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
         return None  # pragma: no cover - scale fallback
+    for dirpath in by_dir:
+        base = os.path.basename(dirpath)
+        # '%' marks a hive-escaped char in the dir name and the default-
+        # partition name stands for NULL; parsing either verbatim would
+        # round-trip a different value than the Spark reader — fall back.
+        if (
+            not base.startswith("p=")
+            or "%" in base
+            or base == "p=__HIVE_DEFAULT_PARTITION__"
+        ):
+            return None
+    if _footer_rows(sum(by_dir.values(), [])) > _LOCAL_MANIFEST_MAX_ROWS:
+        return None
     rows = []
-    total_rows = 0
     for dirpath in sorted(by_dir):
         base = os.path.basename(dirpath)
-        # '%' marks a hive-escaped char in the dir name; parsing it
-        # verbatim would round-trip a different value — fall back.
-        if not base.startswith("p=") or "%" in base:
-            return None  # pragma: no cover - unexpected layout
         tbl = pq.ParquetDataset(by_dir[dirpath]).read(
             columns=["day"], use_threads=True
         )
-        total_rows += tbl.num_rows
-        if total_rows > _LOCAL_MANIFEST_MAX_ROWS:
-            return None  # pragma: no cover - scale fallback
         days = [d for d in tbl.column("day").to_pylist() if d is not None]
         rows.append(
             {

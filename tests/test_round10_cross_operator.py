@@ -158,3 +158,45 @@ def test_join_skew_advisor_internal_invariants(spark):
     # occupancy can only stay equal or grow with more partitions
     occ = got.sort_values("n_partitions")["partitions_nonempty"].tolist()
     assert occ == sorted(occ)
+
+
+def test_wrapper_pairs_are_containment_pairs(spark, tmp_path):
+    """Every wrapper-audit pair (containment ≥ 0.8) is a containment
+    pair (≥ 0.6) over the same capped shingle index: n_common, both
+    set sizes and the containment ratio must agree exactly. The corpus
+    gets planted wrappers — a 10-token doc and a copy followed by 30
+    fresh tokens (containment 1, jaccard ≈ 0.2) — so the check is
+    never vacuous."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _skip_if_empty("documents")
+    docs = pq.read_table(f"{SF}/documents.parquet")
+    template = docs.slice(0, 1).to_pylist()[0]
+    top = max(docs.column("doc_id").to_pylist()) + 1
+    planted = []
+    for i in range(3):
+        inner = " ".join(f"in{i}x{k}" for k in range(10))
+        outer = inner + "".join(f" out{i}x{k}" for k in range(30))
+        for j, text in enumerate((inner, outer)):
+            planted.append({**template, "doc_id": top + 2 * i + j,
+                            "text": text, "n_chars": len(text)})
+    corpus = pa.concat_tables(
+        [docs, pa.Table.from_pylist(planted, schema=docs.schema)]
+    )
+    pq.write_table(corpus, tmp_path / "documents.parquet")
+
+    def run(name):
+        return engine.QUERIES[name](spark, str(tmp_path)).toPandas()
+
+    wrap = run("l_wrapper_pair_audit")
+    cont = run("l_containment_pairs")
+    pairs = set(zip(wrap["doc_a"], wrap["doc_b"]))
+    assert {(top + 2 * i, top + 2 * i + 1) for i in range(3)} <= pairs
+    joined = wrap.merge(
+        cont, on=["doc_a", "doc_b"], how="left", suffixes=("_w", "_c"),
+        indicator=True,
+    )
+    assert (joined["_merge"] == "both").all()
+    for c in ("n_common", "size_a", "size_b", "containment"):
+        assert (joined[f"{c}_w"] == joined[f"{c}_c"]).all(), c

@@ -107,16 +107,53 @@ def test_local_manifest_zero_rows_writes_no_partitions(spark, tmp_path):
     assert [n for n in os.listdir(man_dir) if n.startswith("part=")] == []
 
 
-def test_local_manifest_row_cap_falls_back(tmp_path, spark):
+def _write_pe_sample(spark, data_dir, rows):
+    """Write partition-evolution rows (event_id, user_id, day, p) in the
+    hive p=… layout the pipeline stages them in."""
+    from dock_financial_data_pipelines_spark.plans.pipeline import _PE_DDL
+    from dock_financial_data_pipelines_spark.sources.sinks import (
+        write_partitioned,
+    )
+
+    df = spark.createDataFrame(rows, _PE_DDL)
+    write_partitioned(df.repartition("p"), data_dir, "p")
+    return data_dir
+
+
+_PE_SAMPLE = [
+    (1, 10, "1998-01-01", "1998-01-01"),
+    (2, 11, "1998-01-01", "1998-01-01"),
+    (3, 12, "1998-01-02", "1998-01-02"),
+    (4, 13, None, "1998-01-02"),  # null day: skipped by
+    (5, 14, "1998-02-03", "1998-02"),  # distinct/min/max
+]
+
+
+def test_local_manifest_row_cap_falls_back(tmp_path, spark, monkeypatch):
+    """Both committer-side builders check the row cap from the parquet
+    footers and fall back BEFORE reading any table."""
+    import pyarrow.parquet as pq
+
     from dock_financial_data_pipelines_spark.plans import pipeline as pl
 
     _root, data_dir, _man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
-    old = pl._LOCAL_MANIFEST_MAX_ROWS
-    try:
-        pl._LOCAL_MANIFEST_MAX_ROWS = 2
-        assert pl._local_shard_manifest(data_dir) is None
-    finally:
-        pl._LOCAL_MANIFEST_MAX_ROWS = old
+    pe_dir = _write_pe_sample(spark, str(tmp_path / "pe_data"), _PE_SAMPLE)
+
+    def no_read(*_a, **_kw):
+        raise AssertionError("table read past the row cap")
+
+    monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
+    monkeypatch.setattr(pq, "ParquetDataset", no_read)
+    monkeypatch.setattr(pq, "read_table", no_read)
+    assert pl._local_shard_manifest(data_dir) is None
+    assert pl._pe_local_manifest(pe_dir) is None
+
+
+def _pe_stats(rows):
+    return {
+        r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
+        for r in rows
+    }
 
 
 def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
@@ -124,41 +161,36 @@ def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
         _PE_DDL,
         _pe_local_manifest,
     )
-    from dock_financial_data_pipelines_spark.sources.sinks import (
-        write_partitioned,
-    )
 
-    df = spark.createDataFrame(
-        [
-            (1, 10, "1998-01-01", "1998-01-01"),
-            (2, 11, "1998-01-01", "1998-01-01"),
-            (3, 12, "1998-01-02", "1998-01-02"),
-            (4, 13, None, "1998-01-02"),  # null day: skipped by
-            (5, 14, "1998-02-03", "1998-02"),  # distinct/min/max
-        ],
-        _PE_DDL,
-    )
-    data_dir = str(tmp_path / "pe_data")
-    write_partitioned(df.repartition("p"), data_dir, "p")
-    want = {
-        r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
-        for r in read_parquet_or_empty(spark, data_dir, _PE_DDL)
-        .groupBy("p")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("day").cast("long").alias("n_days"),
-            F.min("day").alias("min_day"),
-            F.max("day").alias("max_day"),
+    def spark_stats(data_dir):
+        return _pe_stats(
+            read_parquet_or_empty(spark, data_dir, _PE_DDL)
+            .groupBy("p")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.countDistinct("day").cast("long").alias("n_days"),
+                F.min("day").alias("min_day"),
+                F.max("day").alias("max_day"),
+            )
+            .collect()
         )
-        .collect()
-    }
+
+    data_dir = _write_pe_sample(spark, str(tmp_path / "pe_data"), _PE_SAMPLE)
     got_rows = _pe_local_manifest(data_dir)
     assert got_rows is not None
-    got = {
-        r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
-        for r in got_rows
-    }
-    assert got == want
+    assert _pe_stats(got_rows) == spark_stats(data_dir)
+
+    # A null p lands in p=__HIVE_DEFAULT_PARTITION__, which the Spark
+    # reader maps back to NULL: the local fold must fall back rather
+    # than report the literal directory name.
+    null_dir = _write_pe_sample(
+        spark,
+        str(tmp_path / "pe_null"),
+        _PE_SAMPLE + [(6, 15, "1998-03-01", None)],
+    )
+    assert os.path.isdir(os.path.join(null_dir, "p=__HIVE_DEFAULT_PARTITION__"))
+    assert None in spark_stats(null_dir)
+    assert _pe_local_manifest(null_dir) is None
 
 
 def test_matview_fused_deltas_match_mv_agg(spark, sf_dir):
