@@ -16,6 +16,8 @@ STMTS:240-245) → the per-account statement with running balance.
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import logging
 import os
 import shutil
 import tempfile
@@ -35,6 +37,7 @@ from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.sources.sinks import (
     write_metadata_parquet,
     write_partitioned,
+    write_rows_pyarrow,
 )
 
 
@@ -838,58 +841,109 @@ def _pack_half(docs: DataFrame, parity: int, offset=None) -> DataFrame:
 
 
 _REL_SCHEMA_DDL = "doc_id long, tokens long, dg string, shard long"
-_MANIFEST_DDL = "shard long, n_docs long, n_tokens long, digest long"
 
 
-def _rel_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+# ---------------------------------------------------------------------------
+# The manifest builder. A manifest holds one row per partition value of
+# a staged version (per shard, or per p=… directory), computed from a
+# READ-BACK of the staged files. An aggregate list names its columns as
+# (output column, kind, input column); each kind is defined once per
+# engine below — a Spark aggregate and a driver-side fold — so the two
+# forms of one manifest cannot drift apart. Nulls are skipped by every
+# kind but count; sum and digest are 0 when every input is null.
+# ---------------------------------------------------------------------------
+_SHARD_STATS = (
+    ("n_docs", "count", None),
+    ("n_tokens", "sum", "tokens"),
+    ("digest", "digest", None),
+)
+# Shard stats plus per-shard key bounds (min/max doc_id) — the Iceberg
+# column-stats idea at shard grain, what manifest pruning plans from.
+_RANGE_STATS = _SHARD_STATS[:2] + (
+    ("min_doc", "min", "doc_id"),
+    ("max_doc", "max", "doc_id"),
+)
 
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("tokens", LongType()),
-            StructField("dg", StringType()),
-            StructField("shard", LongType()),
+_SPARK_AGG = {
+    "count": lambda c: F.count(F.lit(1)).cast("long"),
+    "sum": lambda c: F.coalesce(F.sum(c), F.lit(0)).cast("long"),
+    "min": F.min,
+    "max": F.max,
+    "count_distinct": lambda c: F.countDistinct(c).cast("long"),
+    "digest": lambda c: F.coalesce(F.expr(f"bit_xor({_DIG60})"), F.lit(0))
+    .cast("long"),
+}
+
+
+def _nonnull(col: list, idx: list) -> list:
+    return [col[i] for i in idx if col[i] is not None]
+
+
+def _local_digest(cols: dict, idx: list, _c) -> int:
+    """bit_xor of conv(substring(md5(doc_id || ':' || tokens), 1, 15),
+    16, 10) — a null input nulls the concat, so the row is skipped."""
+    acc = 0
+    for i in idx:
+        doc_id, tokens = cols["doc_id"][i], cols["tokens"][i]
+        if doc_id is not None and tokens is not None:
+            acc ^= int(
+                hashlib.md5(f"{doc_id}:{tokens}".encode()).hexdigest()[:15],
+                16,
+            )
+    return acc
+
+
+# (column values by name, row indices of one partition, input column)
+_LOCAL_AGG = {
+    "count": lambda cols, idx, c: len(idx),
+    "sum": lambda cols, idx, c: sum(_nonnull(cols[c], idx)),
+    # Python and Spark string min/max are both code-point order
+    "min": lambda cols, idx, c: min(_nonnull(cols[c], idx), default=None),
+    "max": lambda cols, idx, c: max(_nonnull(cols[c], idx), default=None),
+    "count_distinct": lambda cols, idx, c: len(set(_nonnull(cols[c], idx))),
+    "digest": _local_digest,
+}
+
+
+def _ddl_types(ddl: str) -> dict:
+    return dict(f.split() for f in ddl.split(","))
+
+
+def _manifest_ddl(schema: str, part_col: str, aggs) -> str:
+    """The manifest's schema: the partition column, then one column per
+    aggregate — min/max keep their input's type, every other kind is a
+    long."""
+    types = _ddl_types(schema)
+    return ", ".join(
+        [f"{part_col} {types[part_col]}"]
+        + [
+            f"{out} {types[c] if kind in ('min', 'max') else 'long'}"
+            for out, kind, c in aggs
         ]
     )
 
 
-def _manifest_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
+_MANIFEST_DDL = _manifest_ddl(_REL_SCHEMA_DDL, "shard", _SHARD_STATS)
 
-    return StructType(
-        [
-            StructField("shard", LongType()),
-            StructField("n_docs", LongType()),
-            StructField("n_tokens", LongType()),
-            StructField("digest", LongType()),
-        ]
+
+def _spark_manifest(data: DataFrame, part_col: str, aggs) -> DataFrame:
+    """The Spark form of the manifest builder: one row per ``part_col``
+    value of ``data``. It is the fallback of the local form below, and
+    the recount a reader checks a manifest against."""
+    return data.groupBy(part_col).agg(
+        *[_SPARK_AGG[kind](c).alias(out) for out, kind, c in aggs]
     )
 
 
-def _shard_manifest(data: DataFrame) -> DataFrame:
-    return data.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.expr(f"bit_xor({_DIG60})"), F.lit(0))
-        .cast("long")
-        .alias("digest"),
-    )
-
-
-# Bounds for the committer-side manifest fold below: a staged version
-# at or under these sizes has its manifest computed by the COMMITTER
-# (one pyarrow read-back of the files it just wrote) instead of a
-# second Spark job. ~128k rows of md5 cost ≈0.1 s driver-side — at
-# parity with the Spark action's fixed overhead; anything bigger keeps
-# the distributed scan.
+# Bounds for the local form: a staged version at or under these sizes
+# has its manifest computed by the COMMITTER (one pyarrow read-back of
+# the files it just wrote) instead of a second Spark job. ~128k rows of
+# md5 cost ≈0.1 s driver-side — at parity with the Spark action's fixed
+# overhead; anything bigger keeps the distributed scan.
 _LOCAL_MANIFEST_MAX_ROWS = 131072
 _LOCAL_MANIFEST_MAX_BYTES = 64 << 20
+
+_log = logging.getLogger("dock_fdp_spark.tableformat")
 
 
 def _footer_rows(files) -> int:
@@ -902,24 +956,31 @@ def _footer_rows(files) -> int:
     return sum(pq.read_metadata(p).num_rows for p in files)
 
 
-def _local_shard_manifest(data_dir: str):
-    """Per-shard manifest rows computed driver-side from the staged
-    parquet files themselves (flat layout only) — bit-identical to
-    ``_shard_manifest`` over the read-back: n_docs = count, n_tokens =
-    sum(tokens) nulls-skipped (0 when all null), digest = bit_xor over
-    ``conv(substring(md5(doc_id || ':' || tokens), 1, 15), 16, 10)``
-    with null inputs skipped (0 when all null). Returns None when the
-    staged version exceeds the driver-side bounds (falls back to the
-    Spark aggregate) — guide §5's bounded-driver rule.
+def _spark_fallback(data_dir: str, reason: str) -> None:
+    """Log why the local form hands ``data_dir`` to the Spark form;
+    returns the local form's None."""
+    _log.info("manifest of %s falls back to Spark: %s", data_dir, reason)
+
+
+def _local_manifest(
+    data_dir: str, schema: str, part_col: str, aggs, hive: bool
+):
+    """The local form of the manifest builder: the manifest rows of the
+    staged version in ``data_dir``, computed driver-side from its
+    parquet files and equal to ``_spark_manifest`` over the read-back.
+    ``hive`` versions carry ``part_col`` in their ``part_col=value``
+    directory names, flat ones as a data column. Returns None, and logs
+    why, when the version is past the driver bounds (byte cap, then the
+    footer row cap — both before any table read) or holds a partition
+    value a directory name cannot be trusted for: the caller then runs
+    the Spark form (guide §5's bounded-driver rule).
 
     This IS still the protocol's read-back honesty proof: the manifest
     derives from the bytes the staging write landed, not from the
     in-flight DataFrame — only the scan engine changed (the committer
-    process reads its own output files, as real table formats do when
-    they write manifest stats at commit time)."""
-    import hashlib
-
-    import pyarrow.parquet as pq
+    reads its own output files, as real table formats do when they
+    write manifest stats at commit time)."""
+    import pyarrow.dataset as ds
 
     files = []
     total_bytes = 0
@@ -930,126 +991,79 @@ def _local_shard_manifest(data_dir: str):
                 files.append(p)
                 total_bytes += os.path.getsize(p)
     if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
-        return None
+        return _spark_fallback(data_dir, "byte cap")
+    value_of = {}
+    if hive:
+        typ = int if _ddl_types(schema)[part_col] in ("long", "int") else str
+        for d in {os.path.dirname(p) for p in files}:
+            base = os.path.basename(d)
+            # The default-partition name stands for NULL and '%' marks a
+            # hive-escaped char; parsing either verbatim would round-trip
+            # a different value than the Spark reader.
+            if base == f"{part_col}=__HIVE_DEFAULT_PARTITION__":
+                return _spark_fallback(data_dir, "default-partition directory")
+            if "%" in base or not base.startswith(f"{part_col}="):
+                return _spark_fallback(data_dir, "escaped partition directory")
+            value_of[d] = typ(base[len(part_col) + 1:])
     if _footer_rows(files) > _LOCAL_MANIFEST_MAX_ROWS:
-        return None
-    # ONE threaded dataset read over the whole file list — a per-file
-    # read_table loop costs ~3-5 ms of open/footer overhead per file,
-    # which the small-file-debris stagers (hundreds of
-    # maxRecordsPerFile files) turned into a second's worth of serial
-    # driver work (measured: compact_snapshot +1.1 s on the first cut
-    # of this fold).
+        return _spark_fallback(data_dir, "row cap")
+    inputs = {c for _out, _kind, c in aggs if c}
+    if any(kind == "digest" for _out, kind, _c in aggs):
+        inputs |= {"doc_id", "tokens"}
+    columns = sorted(inputs - {part_col}) + (
+        ["__filename"] if hive else [part_col]
+    )
+    cols = {c: [] for c in columns}
     if files:
-        tbl = pq.ParquetDataset(files).read(
-            columns=["doc_id", "tokens", "shard"], use_threads=True
+        # ONE threaded dataset read over the whole file list — a
+        # per-file read loop costs ~3-5 ms of open/footer overhead per
+        # file, which the small-file-debris stagers (hundreds of
+        # maxRecordsPerFile files) turn into a second of serial work.
+        tbl = ds.dataset(files, format="parquet").to_table(
+            columns=columns, use_threads=True
         )
-    else:
-        tbl = None
-    stats: dict = {}
-    if tbl is not None:
-        doc_ids = tbl.column("doc_id").to_pylist()
-        toks = tbl.column("tokens").to_pylist()
-        shards = tbl.column("shard").to_pylist()
-        for doc_id, tokens, shard in zip(doc_ids, toks, shards):
-            acc = stats.get(shard)
-            if acc is None:
-                acc = stats[shard] = [0, None, None]
-            acc[0] += 1
-            if tokens is not None:
-                acc[1] = tokens if acc[1] is None else acc[1] + tokens
-            if doc_id is not None and tokens is not None:
-                d = int(
-                    hashlib.md5(
-                        f"{doc_id}:{tokens}".encode()
-                    ).hexdigest()[:15],
-                    16,
-                )
-                acc[2] = d if acc[2] is None else acc[2] ^ d
-    # A null shard would need the hive default-partition dir name the
-    # distributed writer produces — fall back rather than write a
-    # literal 'part=None' path (no current stager derives a null
-    # shard; this is the same guard write_metadata_parquet carries).
-    if None in stats:
-        return None  # pragma: no cover - defensive fallback
-    rows = []
-    for shard in sorted(stats):
-        n_docs, n_tokens, digest = stats[shard]
-        # part = shard % 4 with Java remainder semantics (sign follows
-        # the dividend), matching the Spark expression it replaces.
-        part = shard % 4 if shard >= 0 else -((-shard) % 4)
-        rows.append(
-            {
-                "shard": shard,
-                "n_docs": n_docs,
-                "n_tokens": 0 if n_tokens is None else n_tokens,
-                "digest": 0 if digest is None else digest,
-                "part": part,
-            }
-        )
-    return rows
-
-
-def _manifest_pa_fields():
-    import pyarrow as pa
-
+        cols = {c: tbl.column(c).to_pylist() for c in columns}
+    keys = (
+        [value_of[os.path.dirname(f)] for f in cols["__filename"]]
+        if hive
+        else cols[part_col]
+    )
+    groups: dict = {}
+    for i, k in enumerate(keys):
+        groups.setdefault(k, []).append(i)
+    if None in groups:
+        # a null in a flat layout's partition column
+        return _spark_fallback(data_dir, "null partition")
     return [
-        pa.field("shard", pa.int64()),
-        pa.field("n_docs", pa.int64()),
-        pa.field("n_tokens", pa.int64()),
-        pa.field("digest", pa.int64()),
+        {
+            part_col: k,
+            **{
+                out: _LOCAL_AGG[kind](cols, groups[k], c)
+                for out, kind, c in aggs
+            },
+        }
+        for k in sorted(groups)
     ]
 
 
-def _pe_local_manifest(data_dir: str):
-    """Committer-side per-directory stats for the partition-evolution
-    manifests (hive layout: the partition value lives in the p=… dir
-    name) — bit-identical to the Spark aggregate it replaces: n_rows =
-    count, n_days = count distinct non-null day, min/max day null-
-    skipped (None when all null; Python and Spark string min/max are
-    both byte-lexicographic). Returns None past the driver bounds or
-    on an unexpected layout — the Spark aggregate fallback runs then."""
-    import pyarrow.parquet as pq
+def _pa_fields(ddl: str) -> list:
+    import pyarrow as pa
 
-    by_dir: dict = {}
-    total_bytes = 0
-    for dirpath, _dirnames, filenames in os.walk(data_dir):
-        for fn in filenames:
-            if fn.endswith(".parquet"):
-                p = os.path.join(dirpath, fn)
-                by_dir.setdefault(dirpath, []).append(p)
-                total_bytes += os.path.getsize(p)
-    if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
-        return None  # pragma: no cover - scale fallback
-    for dirpath in by_dir:
-        base = os.path.basename(dirpath)
-        # '%' marks a hive-escaped char in the dir name and the default-
-        # partition name stands for NULL; parsing either verbatim would
-        # round-trip a different value than the Spark reader — fall back.
-        if (
-            not base.startswith("p=")
-            or "%" in base
-            or base == "p=__HIVE_DEFAULT_PARTITION__"
-        ):
-            return None
-    if _footer_rows(sum(by_dir.values(), [])) > _LOCAL_MANIFEST_MAX_ROWS:
-        return None
-    rows = []
-    for dirpath in sorted(by_dir):
-        base = os.path.basename(dirpath)
-        tbl = pq.ParquetDataset(by_dir[dirpath]).read(
-            columns=["day"], use_threads=True
-        )
-        days = [d for d in tbl.column("day").to_pylist() if d is not None]
-        rows.append(
-            {
-                "p": base[2:],
-                "n_rows": tbl.num_rows,
-                "n_days": len(set(days)),
-                "min_day": min(days) if days else None,
-                "max_day": max(days) if days else None,
-            }
-        )
-    return rows
+    pa_type = {"long": pa.int64(), "int": pa.int32(), "string": pa.string()}
+    return [pa.field(n, pa_type[t]) for n, t in _ddl_types(ddl).items()]
+
+
+def _read_parts(
+    spark: SparkSession, data_dir: str, schema: str, col: str, values
+) -> DataFrame:
+    """Read only the ``col=value`` directories of a hive-laid version —
+    the pruned read a manifest plans. No selected value reads as an
+    empty relation."""
+    if not values:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", data_dir).parquet(
+        *[os.path.join(data_dir, f"{col}={v}") for v in sorted(values)]
+    )
 
 
 def _publish_version(
@@ -1062,8 +1076,7 @@ def _publish_version(
     _stage_version(spark, df, root, version)
     _commit_pointer(root, version)
     return read_parquet_or_empty(
-        spark, os.path.join(root, "manifest", f"v={version}"),
-        _manifest_schema(),
+        spark, os.path.join(root, "manifest", f"v={version}"), _MANIFEST_DDL
     ).drop("part")
 
 
@@ -1105,7 +1118,7 @@ def _read_visible(
     if version is None:
         return spark.createDataFrame([], _REL_SCHEMA_DDL)
     return read_parquet_or_empty(
-        spark, os.path.join(root, "data", f"v={version}"), _rel_schema()
+        spark, os.path.join(root, "data", f"v={version}"), _REL_SCHEMA_DDL
     )
 
 
@@ -1170,7 +1183,7 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2 attempt: pack the odd half above v1's shard range, stage ONLY
     # the first shard, then crash before commit (no manifest, no swap).
     v1_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), _rel_schema()
+        spark, os.path.join(root, "data", "v=1"), _REL_SCHEMA_DDL
     )
     offset = v1_data.agg(
         (F.coalesce(F.max("shard"), F.lit(-1)) + 1).alias("offset")
@@ -1185,10 +1198,10 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -- crash here: no manifest/v=2, CURRENT still points at 1 --
 
     staged_v2 = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=2"), _rel_schema()
+        spark, os.path.join(root, "data", "v=2"), _REL_SCHEMA_DDL
     )
     visible = _read_visible(spark, root)
-    recount = _shard_manifest(visible)
+    recount = _spark_manifest(visible, "shard", _SHARD_STATS)
     audit = manifest.alias("m").join(
         recount.alias("d"), "shard", "full_outer"
     )
@@ -1424,10 +1437,10 @@ def pipeline_release_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
 
     v1_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), _rel_schema()
+        spark, os.path.join(root, "data", "v=1"), _REL_SCHEMA_DDL
     )
     v2_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=2"), _rel_schema()
+        spark, os.path.join(root, "data", "v=2"), _REL_SCHEMA_DDL
     )
     retained_row = local_frame(spark, 
         [(4, "retained_versions", retained, 0, 0)],
@@ -1731,7 +1744,11 @@ def _cas_lock(root: str):
 
 
 def _commit_cas(
-    root: str, expected_base, version: int, ref: str = "CURRENT"
+    root: str,
+    expected_base,
+    version: int,
+    ref: str = "CURRENT",
+    staged_dir: str | None = None,
 ) -> bool:
     """Compare-and-swap commit: swing ``ref`` expected_base → version
     only if ``ref`` still equals expected_base AND ``version`` has
@@ -1743,7 +1760,17 @@ def _commit_cas(
     repaired by _fast_forward), never a current-but-unlogged one.
     The whole check→log→swing sequence runs under the table's
     _cas_lock so concurrent committers with distinct version numbers
-    serialize into one linear lineage instead of forking it."""
+    serialize into one linear lineage instead of forking it.
+
+    ``staged_dir`` makes the DATA PUBLISH part of the critical section:
+    the writer-private staging dir is renamed to data/v=N only after
+    the locked checks pass. Writers that stage straight into data/v=N
+    need collision-free version numbers (a shared allocator, or a
+    single writer); independent PROCESSES have none, so two may propose
+    the same head+1 — publishing only after winning the check keeps a
+    loser's staging from clobbering a winner's committed bytes (the
+    object-store analogue: writer-unique staging prefixes + an
+    if-match copy)."""
     with _cas_lock(root):
         if _resolve_current(root, ref) != expected_base:
             return False
@@ -1756,6 +1783,10 @@ def _commit_cas(
             # version and AS-OF resolution stays total. A writer that
             # lost a number race re-reads and allocates fresh.
             return False
+        if staged_dir is not None:
+            dest = os.path.join(root, "data", f"v={version}")
+            shutil.rmtree(dest, ignore_errors=True)  # unreachable leftovers
+            os.rename(staged_dir, dest)
         if not _append_commit_log(
             root, version, -1 if expected_base is None else expected_base
         ):
@@ -1772,31 +1803,42 @@ def _stage_version(
     layout: str = "flat",
     write_tasks: int | None = None,
     file_rows: int | None = None,
+    schema: str = _REL_SCHEMA_DDL,
+    part_col: str = "shard",
+    manifest=_SHARD_STATS,
 ) -> DataFrame:
     """Stage data + manifest for ``version`` (writer-private until the
-    CAS). A retry restages from scratch — the rmtree guards against a
-    dynamic-overwrite blend of a failed attempt's leftover shards with
-    the retry's (the retry may produce FEWER shards). REFUSES a
-    version already in the commit log: committed versions are
-    immutable, and a concurrent writer that lost the version-number
-    race must re-read CURRENT and allocate a fresh number rather than
-    clobber the winner's files (on an object store the same guard is
-    writer-unique staging paths + the O_EXCL log create).
+    CAS) — the one staging path of every version that carries a
+    manifest. Returns the read-back of the staged data. A retry
+    restages from scratch — the rmtree guards against a
+    dynamic-overwrite blend of a failed attempt's leftover partitions
+    with the retry's (the retry may produce FEWER). REFUSES a version
+    already in the commit log: committed versions are immutable, and a
+    concurrent writer that lost the version-number race must re-read
+    CURRENT and allocate a fresh number rather than clobber the
+    winner's files (on an object store the same guard is writer-unique
+    staging paths + the O_EXCL log create).
 
-    ``layout='flat'`` (default since r14) writes plain parquet files
-    into v=N with shard as a data column — the write commits per FILE
+    ``layout='flat'`` (the default) writes plain parquet files into v=N
+    with ``part_col`` as a data column — the write commits per FILE
     instead of per partition DIRECTORY, at a measured ~14 ms/dir of
     Hadoop commit overhead, and file-level bin-packing is also what
-    real table formats compact (files within a partition, not
-    directories). ``layout='hive'`` writes one shard=N directory per
-    shard — required wherever a reader prunes by directory; NO
-    _stage_version reader does (the manifest-pruned and bloom-skipped
-    queries that select shard=N paths stage through write_partitioned
-    directly), which is why flat is safe as the default: the two
-    layouts are logically identical through read_parquet_or_empty's
-    explicit schema. ``write_tasks`` sizes the flat write's shuffle;
-    ``file_rows`` caps rows per output file (small-file debris from
-    ordinary-parallelism tasks instead of one task per file)."""
+    real table formats compact. ``layout='hive'`` writes one
+    ``part_col=value`` directory per value, for tables a reader prunes
+    by directory through ``_read_parts`` (the manifest-pruned, zorder,
+    bloom and partition-evolution queries). Through the explicit
+    ``schema`` the two layouts read back identically. ``write_tasks``
+    sizes the flat write's shuffle; ``file_rows`` caps rows per output
+    file (small-file debris from ordinary-parallelism tasks instead of
+    one task per file).
+
+    ``manifest`` is an aggregate list for the manifest builder — its
+    local form (``_local_manifest``) when the version is within the
+    driver bounds, else its Spark form (``_spark_manifest``) — or a
+    function of the staged read-back, for a manifest whose rows are not
+    one per partition value (the bloom filter's (shard, word) bit
+    matrix) or whose input is a derived column (zorder's in-box count).
+    The shard manifest keeps its part = shard % 4 directory layout."""
     if version in _committed_versions(root):
         raise ValueError(
             f"version {version} is committed and immutable; "
@@ -1809,15 +1851,15 @@ def _stage_version(
     if layout == "flat":
         if not write_tasks and file_rows:
             # An explicit task count: without one, AQE coalesces the
-            # tiny repartition("shard") to ONE post-shuffle partition
-            # and that single task writes every maxRecordsPerFile
-            # debris file serially (measured 4x slower). One task per
-            # core scales with the cluster, not with a local constant.
+            # tiny repartition to ONE post-shuffle partition and that
+            # single task writes every maxRecordsPerFile debris file
+            # serially (measured 4x slower). One task per core scales
+            # with the cluster, not with a local constant.
             write_tasks = spark.sparkContext.defaultParallelism
         out = (
-            df.repartition(write_tasks, "shard")
+            df.repartition(write_tasks, part_col)
             if write_tasks
-            else df.repartition("shard")
+            else df.repartition(part_col)
         )
         writer = out.write.mode("overwrite")
         if file_rows:
@@ -1831,35 +1873,38 @@ def _stage_version(
             writer = writer.option("maxRecordsPerFile", str(file_rows))
         writer.parquet(data_dir)
     else:
-        write_partitioned(df.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
-    # The manifest is shard-count-sized metadata computed from a
-    # read-back of the staged files (the protocol's honesty proof,
-    # unchanged). r14 moved the manifest WRITE driver-side; r15 folds
-    # the read-back SCAN into the committer too for bounded versions
-    # (guide §2.4/§5: one Spark action per staged version, not two —
-    # the second action was ~0.25-0.4 s of pure fixed overhead per
-    # micro-batch in the x23/x25 drains). Oversized versions keep the
-    # distributed aggregate.
-    local_rows = None
-    if layout == "flat":
-        local_rows = _local_shard_manifest(data_dir)
-    if local_rows is not None:
-        from dock_financial_data_pipelines_spark.sources.sinks import (
-            write_rows_pyarrow,
-        )
-
-        write_rows_pyarrow(
-            local_rows, _manifest_pa_fields(), man_dir, "part"
-        )
-    else:  # pragma: no cover - scale fallback
-        write_metadata_parquet(
-            _shard_manifest(staged).withColumn(
-                "part", (F.col("shard") % 4).cast("long")
-            ),
-            man_dir,
-            "part",
-        )
+        write_partitioned(df.repartition(part_col), data_dir, part_col)
+    staged = read_parquet_or_empty(spark, data_dir, schema)
+    # The manifest is partition-count-sized metadata computed from a
+    # read-back of the staged files (the protocol's honesty proof). The
+    # committer folds bounded versions itself: one Spark action per
+    # staged version, not two — the second was ~0.25-0.4 s of fixed
+    # overhead per micro-batch in the x23/x25 drains.
+    if callable(manifest):
+        write_metadata_parquet(manifest(staged), man_dir)
+        return staged
+    man_part = "part" if manifest is _SHARD_STATS else None
+    rows = _local_manifest(
+        data_dir, schema, part_col, manifest, layout == "hive"
+    )
+    if rows is None:
+        man = _spark_manifest(staged, part_col, manifest)
+        if man_part:
+            man = man.withColumn(man_part, (F.col(part_col) % 4).cast("long"))
+        write_metadata_parquet(man, man_dir, man_part)
+        return staged
+    if man_part:
+        for r in rows:
+            # Java remainder semantics (the sign follows the dividend),
+            # matching the Spark expression above
+            k = r[part_col]
+            r[man_part] = k % 4 if k >= 0 else -((-k) % 4)
+    write_rows_pyarrow(
+        rows,
+        _pa_fields(_manifest_ddl(schema, part_col, manifest)),
+        man_dir,
+        man_part,
+    )
     return staged
 
 
@@ -1868,7 +1913,7 @@ def _read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
     just CURRENT — the data and manifest of a committed version are
     immutable once the log entry exists."""
     return read_parquet_or_empty(
-        spark, os.path.join(root, "data", f"v={version}"), _rel_schema()
+        spark, os.path.join(root, "data", f"v={version}"), _REL_SCHEMA_DDL
     )
 
 
@@ -2528,19 +2573,6 @@ def pipeline_write_audit_publish(
     )
 
 
-def _shard_manifest_stats(data: DataFrame) -> DataFrame:
-    """Manifest rows enriched with per-shard key bounds (min/max
-    doc_id) — the Iceberg column-stats idea at shard grain. Written
-    beside the data like the plain manifest; bytes-sized, never
-    data-sized."""
-    return data.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.min("doc_id").cast("long").alias("min_doc"),
-        F.max("doc_id").cast("long").alias("max_doc"),
-    )
-
-
 _PRUNE_LO, _PRUNE_HI = 100, 260
 
 
@@ -2592,9 +2624,9 @@ def pipeline_manifest_pruned_read(
     packed = _pack_where(docs, "doc_id % 2 = 0", _COMPACT_SMALL_BUDGET)
     data_dir = os.path.join(root, "data", "v=1")
     man_dir = os.path.join(root, "manifest", "v=1")
-    write_partitioned(packed.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
-    write_metadata_parquet(_shard_manifest_stats(staged), man_dir)
+    staged = _stage_version(
+        spark, packed, root, 1, layout="hive", manifest=_RANGE_STATS
+    )
     assert _commit_cas(root, None, 1)
 
     man = spark.read.parquet(man_dir)
@@ -2610,17 +2642,9 @@ def pipeline_manifest_pruned_read(
         spark, 0, "manifest_census", total, 0
     ).withColumn("n_tokens", F.lit(len(hit)).cast("long"))
 
-    if hit:
-        pruned = spark.read.schema(_rel_schema()).option(
-            "basePath", data_dir
-        ).parquet(
-            *[os.path.join(data_dir, f"shard={s}") for s in sorted(hit)]
-        )
-    else:
-        pruned = spark.createDataFrame([], _REL_SCHEMA_DDL)
-    pruned = pruned.where(
-        F.col("doc_id").between(_PRUNE_LO, _PRUNE_HI)
-    )
+    pruned = _read_parts(
+        spark, data_dir, _REL_SCHEMA_DDL, "shard", hit
+    ).where(F.col("doc_id").between(_PRUNE_LO, _PRUNE_HI))
     full = staged.where(F.col("doc_id").between(_PRUNE_LO, _PRUNE_HI))
     return (
         census.select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
@@ -2685,7 +2709,7 @@ def pipeline_snapshot_schema_evolution(
     write_partitioned(v2.repartition("shard"), data_dir, "shard")
     assert _commit_cas(root, 1, 2)
 
-    evolved = _rel_schema().add("lang", "string")
+    evolved = _REL_SCHEMA_DDL + ", lang string"
     v1_orig = _read_version(spark, root, 1)
     v1_evo = read_parquet_or_empty(
         spark, os.path.join(root, "data", "v=1"), evolved
@@ -3827,6 +3851,18 @@ def pipeline_zorder_cluster_rewrite(
         _s21_interleave_sql("cb", "tb").replace(" IDIV ", " div ")
     )
 
+    def box_stats(staged):
+        """Per-shard axis bounds plus the in-box row count (over a
+        derived column, so it stays a Spark aggregate)."""
+        hit = F.when(
+            (F.col("cb") < _ZC_BOX_CB) & (F.col("tb") >= _ZC_BOX_TB), 1
+        ).otherwise(0)
+        return staged.groupBy("shard").agg(
+            F.min("cb").alias("cmn"),
+            F.max("tb").alias("tmx"),
+            F.sum(hit).alias("mh"),
+        )
+
     def publish(rows, order_cols, version, base):
         sharded = rows.withColumn(
             "shard",
@@ -3835,21 +3871,10 @@ def pipeline_zorder_cluster_rewrite(
                 f"div {_ZC_RG} AS LONG)"
             ),
         ).select("doc_id", "tokens", "dg", "cb", "tb", "shard")
-        data_dir = os.path.join(root, "data", f"v={version}")
-        man_dir = os.path.join(root, "manifest", f"v={version}")
-        shutil.rmtree(data_dir, ignore_errors=True)
-        shutil.rmtree(man_dir, ignore_errors=True)
-        write_partitioned(sharded.repartition("shard"), data_dir, "shard")
-        staged = read_parquet_or_empty(spark, data_dir, _ZC_DDL)
-        hit = F.when(
-            (F.col("cb") < _ZC_BOX_CB) & (F.col("tb") >= _ZC_BOX_TB), 1
-        ).otherwise(0)
-        man = staged.groupBy("shard").agg(
-            F.min("cb").alias("cmn"),
-            F.max("tb").alias("tmx"),
-            F.sum(hit).alias("mh"),
+        staged = _stage_version(
+            spark, sharded, root, version, layout="hive", schema=_ZC_DDL,
+            manifest=box_stats,
         )
-        write_metadata_parquet(man, man_dir)
         assert _commit_cas(root, base, version)
         return staged
 
@@ -3875,17 +3900,7 @@ def pipeline_zorder_cluster_rewrite(
                 (F.col("cmn") < _ZC_BOX_CB) & (F.col("tmx") >= _ZC_BOX_TB)
             ).collect()
         ]
-        if hit_shards:
-            scanned = spark.read.schema(_ZC_DDL).option(
-                "basePath", data_dir
-            ).parquet(
-                *[
-                    os.path.join(data_dir, f"shard={s}")
-                    for s in sorted(hit_shards)
-                ]
-            )
-        else:
-            scanned = spark.createDataFrame([], _ZC_DDL)
+        scanned = _read_parts(spark, data_dir, _ZC_DDL, "shard", hit_shards)
         matches = scanned.where(
             (F.col("cb") < _ZC_BOX_CB) & (F.col("tb") >= _ZC_BOX_TB)
         )
@@ -4059,31 +4074,33 @@ def pipeline_manifest_bloom_skipping(
     )
     data_dir = os.path.join(root, "data", "v=1")
     man_dir = os.path.join(root, "manifest", "v=1")
-    write_partitioned(rows.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
 
-    pos_arr = F.array(
-        *[
-            F.expr(_blm_pos(j, "STRING", _HEX_SPARK)).cast("long")
-            for j in range(_BLM_K)
-        ]
-    )
-    posed = staged.select(
-        "shard", F.explode(pos_arr).alias("pos")
-    )
-    bloom = (
-        posed.select(
-            "shard",
-            F.expr(f"pos div {_BLM_WORD}").cast("long").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), "
-                f"CAST(pmod(pos, {_BLM_WORD}) AS INT))"
-            ).alias("mask"),
+    def bloom_words(staged):
+        """The (shard, word) bit matrix: rows are words, not one per
+        shard, so it stays a Spark aggregate."""
+        pos_arr = F.array(
+            *[
+                F.expr(_blm_pos(j, "STRING", _HEX_SPARK)).cast("long")
+                for j in range(_BLM_K)
+            ]
         )
-        .groupBy("shard", "word")
-        .agg(F.expr("bit_or(mask)").alias("bits"))
+        return (
+            staged.select("shard", F.explode(pos_arr).alias("pos"))
+            .select(
+                "shard",
+                F.expr(f"pos div {_BLM_WORD}").cast("long").alias("word"),
+                F.expr(
+                    "shiftleft(CAST(1 AS BIGINT), "
+                    f"CAST(pmod(pos, {_BLM_WORD}) AS INT))"
+                ).alias("mask"),
+            )
+            .groupBy("shard", "word")
+            .agg(F.expr("bit_or(mask)").alias("bits"))
+        )
+
+    staged = _stage_version(
+        spark, rows, root, 1, layout="hive", manifest=bloom_words
     )
-    write_metadata_parquet(bloom, man_dir)
     assert _commit_cas(root, None, 1)
 
     keys = (
@@ -4136,18 +4153,9 @@ def pipeline_manifest_bloom_skipping(
     fneg = actual.exceptAll(cand.select("doc_id", "shard"))
 
     hit_shards = [r.shard for r in cand.select("shard").distinct().collect()]
-    if hit_shards:
-        scanned = spark.read.schema(_rel_schema()).option(
-            "basePath", data_dir
-        ).parquet(
-            *[
-                os.path.join(data_dir, f"shard={s}")
-                for s in sorted(hit_shards)
-            ]
-        )
-    else:
-        scanned = spark.createDataFrame([], _REL_SCHEMA_DDL)
-    looked = scanned.where(f"doc_id % {_BLM_MOD} = {_BLM_RES}")
+    looked = _read_parts(
+        spark, data_dir, _REL_SCHEMA_DDL, "shard", hit_shards
+    ).where(f"doc_id % {_BLM_MOD} = {_BLM_RES}")
 
     def pair_stat(df, ord_, name, with_shards=True):
         return df.agg(
@@ -4664,7 +4672,7 @@ def _storm_stage_raw(root: str, version: int, rows: list) -> None:
     """Writer-private staging straight into data/v=N — safe when
     version numbers are collision-free by construction (the thread
     storm's shared allocator; single-writer protocol queries). The
-    process storm stages via _storm_stage_dir + _commit_cas_data
+    process storm stages via _storm_stage_dir + _commit_cas(staged_dir=)
     instead."""
     _storm_stage_dir(os.path.join(root, "data", f"v={version}"), rows)
 
@@ -4767,42 +4775,12 @@ def _storm_census(root: str) -> dict:
     }
 
 
-def _commit_cas_data(
-    root: str, expected_base, version: int, staged_dir: str
-) -> bool:
-    """CAS commit whose DATA PUBLISH is part of the critical section:
-    check-pointer → rename(writer-private staging → data/v=N) →
-    append-log → swing-pointer, all under the table flock. The thread
-    storm could stage straight into data/v=N because its shared
-    allocator made version numbers collision-free; independent
-    PROCESSES have no shared allocator, so two writers may propose the
-    same head+1 — publishing the dir only after winning the locked
-    check is what keeps a loser's staging from clobbering a winner's
-    committed bytes (the object-store analogue: writer-unique staging
-    prefixes + an if-match copy)."""
-    with _cas_lock(root):
-        if _resolve_current(root) != expected_base:
-            return False
-        committed = _committed_versions(root)
-        if committed and version <= committed[-1]:
-            return False
-        dest = os.path.join(root, "data", f"v={version}")
-        shutil.rmtree(dest, ignore_errors=True)  # unreachable leftovers only
-        os.rename(staged_dir, dest)
-        if not _append_commit_log(
-            root, version, -1 if expected_base is None else expected_base
-        ):
-            return False  # pragma: no cover - fresh version under lock
-        _commit_pointer(root, version)
-        return True
-
-
 def _storm_mp_writer(args: tuple) -> int:
     """One PROCESS-isolated storm committer (module-level so spawn can
     pickle it). Unlike the thread variant there is no shared version
     allocator: each attempt proposes head+1, stages to a
-    writer-private dir, and lets the flock-guarded _commit_cas_data
-    arbitrate — a lost race (pointer moved, or the number was taken)
+    writer-private dir, and lets the flock-guarded _commit_cas publish
+    it — a lost race (pointer moved, or the number was taken)
     re-reads and retries from the NEW base, so every increment
     eventually lands exactly once. Returns the writer's refused-CAS
     count (forensic only; schedule-dependent)."""
@@ -4817,7 +4795,7 @@ def _storm_mp_writer(args: tuple) -> int:
             ]
             v = (base or 0) + 1
             _storm_stage_dir(staged, rows)
-            if _commit_cas_data(root, base, v, staged):
+            if _commit_cas(root, base, v, staged_dir=staged):
                 break
             shutil.rmtree(staged, ignore_errors=True)
             refused += 1
@@ -4844,6 +4822,36 @@ def run_commit_storm_mp(
             [(root, w, commits) for w in range(writers)],
         )
     return {**_storm_census(root), "refused": sum(refusals)}
+
+
+def _storm_frame(
+    spark: SparkSession, root: str, stats: dict, extra: tuple = ()
+) -> DataFrame:
+    """The census both storm variants return: the forensic counters of
+    ``stats`` plus what the protocol reader sees, then ``extra`` rows."""
+    vis = _read_visible(spark, root)
+    per_writer = vis.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("doc_id").alias("n_docs"),
+    )
+    fully = per_writer.where(
+        (F.col("n") == _STORM_COMMITS) & (F.col("n_docs") == _STORM_COMMITS)
+    ).count()
+    rows = [
+        (0, "commits_landed", stats["commits"]),
+        (1, "lineage_length", stats["chain_len"]),
+        (2, "lineage_forks", stats["forks"]),
+        (3, "rows_visible", vis.count()),
+        (4, "writers_distinct", vis.select("shard").distinct().count()),
+        (5, "writers_fully_landed", fully),
+        (6, "orphan_dirs_after_gc", stats["orphan_dirs_left"]),
+        *extra,
+    ]
+    return local_frame(
+        spark,
+        [(a, b, int(c)) for a, b, c in rows],
+        "stage_ord int, stage string, value long",
+    )
 
 
 def _storm_oracle() -> str:
@@ -4877,31 +4885,7 @@ def pipeline_commit_storm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multi-job concurrent-publish path: staging is writer-private
     I/O, the serialized section is three metadata file ops."""
     root = _release_root(sf_dir, "commit_storm")
-    stats = run_commit_storm(root)
-
-    vis = _read_visible(spark, root)
-    per_writer = vis.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("doc_id").alias("n_docs"),
-    )
-    fully = per_writer.where(
-        (F.col("n") == _STORM_COMMITS) & (F.col("n_docs") == _STORM_COMMITS)
-    ).count()
-
-    rows = [
-        (0, "commits_landed", stats["commits"]),
-        (1, "lineage_length", stats["chain_len"]),
-        (2, "lineage_forks", stats["forks"]),
-        (3, "rows_visible", vis.count()),
-        (4, "writers_distinct",
-         vis.select("shard").distinct().count()),
-        (5, "writers_fully_landed", fully),
-        (6, "orphan_dirs_after_gc", stats["orphan_dirs_left"]),
-    ]
-    return local_frame(spark, 
-        [(a, b, int(c)) for a, b, c in rows],
-        "stage_ord int, stage string, value long",
-    )
+    return _storm_frame(spark, root, run_commit_storm(root))
 
 
 def _storm_mp_oracle() -> str:
@@ -4935,35 +4919,13 @@ def pipeline_commit_storm_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment shape a single-process thread pool cannot model."""
     root = _release_root(sf_dir, "commit_storm_mp")
     stats = run_commit_storm_mp(root)
-
-    vis = _read_visible(spark, root)
-    per_writer = vis.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("doc_id").alias("n_docs"),
-    )
-    fully = per_writer.where(
-        (F.col("n") == _STORM_COMMITS) & (F.col("n_docs") == _STORM_COMMITS)
-    ).count()
     stage_left = sum(
         1
         for n in os.listdir(os.path.join(root, "data"))
         if n.startswith(".stage-")
     )
-
-    rows = [
-        (0, "commits_landed", stats["commits"]),
-        (1, "lineage_length", stats["chain_len"]),
-        (2, "lineage_forks", stats["forks"]),
-        (3, "rows_visible", vis.count()),
-        (4, "writers_distinct",
-         vis.select("shard").distinct().count()),
-        (5, "writers_fully_landed", fully),
-        (6, "orphan_dirs_after_gc", stats["orphan_dirs_left"]),
-        (7, "stage_dirs_left", stage_left),
-    ]
-    return local_frame(spark, 
-        [(a, b, int(c)) for a, b, c in rows],
-        "stage_ord int, stage string, value long",
+    return _storm_frame(
+        spark, root, stats, ((7, "stage_dirs_left", stage_left),)
     )
 
 
@@ -5184,6 +5146,12 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a residual filter can re-tighten whatever the coarser spec lost.
 # ---------------------------------------------------------------------------
 _PE_DDL = "event_id long, user_id long, day string, p string"
+_PE_STATS = (
+    ("n_rows", "count", None),
+    ("n_days", "count_distinct", "day"),
+    ("min_day", "min", "day"),
+    ("max_day", "max", "day"),
+)
 _PE_DOM_SPLIT = 15  # day-of-month <= 15 -> fine-spec era, else coarse
 
 
@@ -5227,17 +5195,6 @@ def _pe_prune(dirs: list, spec: dict, probe_day: str) -> list:
     if spec["transform"] == "identity":
         return [p for p in dirs if p == probe_day]
     return [p for p in dirs if p == probe_day[:7]]
-
-
-def _pe_read(spark: SparkSession, root: str, version: int, parts=None):
-    data_dir = os.path.join(root, "data", f"v={version}")
-    if parts is None:
-        return read_parquet_or_empty(spark, data_dir, _PE_DDL)
-    if not parts:
-        return spark.createDataFrame([], _PE_DDL)
-    return spark.read.schema(_PE_DDL).option("basePath", data_dir).parquet(
-        *[os.path.join(data_dir, f"p={p}") for p in parts]
-    )
 
 
 def _pe_oracle() -> str:
@@ -5318,59 +5275,27 @@ def pipeline_partition_evolution(
         F.dayofmonth("ts").alias("dom"),
     )
 
-    def _man(staged):
-        return staged.groupBy("p").agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("day").cast("long").alias("n_days"),
-            F.min("day").alias("min_day"),
-            F.max("day").alias("max_day"),
-        )
-
     def _publish(df, version, spec_id, transform, parent):
-        """Publish one era; returns the manifest rows when the
-        committer computed them driver-side (r15 fold, same rationale
-        as _local_shard_manifest: the per-dir stats derive from a
-        pyarrow read-back of the committed files — one Spark action
-        per era instead of two, and the planning collects below reuse
-        the same committed-bytes-derived rows), or None when the era
-        exceeded the driver bounds and the Spark aggregate + collect
-        path ran instead."""
-        data_dir = os.path.join(root, "data", f"v={version}")
-        man_dir = os.path.join(root, "manifest", f"v={version}")
-        write_partitioned(df.repartition("p"), data_dir, "p")
-        rows = _pe_local_manifest(data_dir)
-        if rows is not None:
-            import pyarrow as pa
+        """Publish one era; returns its manifest rows by partition
+        value (manifest-sized: one row per p=… directory)."""
+        import pyarrow.parquet as pq
 
-            from dock_financial_data_pipelines_spark.sources.sinks import (
-                write_rows_pyarrow,
-            )
-
-            write_rows_pyarrow(
-                rows,
-                [
-                    pa.field("p", pa.string()),
-                    pa.field("n_rows", pa.int64()),
-                    pa.field("n_days", pa.int64()),
-                    pa.field("min_day", pa.string()),
-                    pa.field("max_day", pa.string()),
-                ],
-                man_dir,
-            )
-        else:  # pragma: no cover - scale fallback
-            staged = read_parquet_or_empty(spark, data_dir, _PE_DDL)
-            write_metadata_parquet(_man(staged), man_dir)
+        _stage_version(
+            spark, df, root, version, layout="hive", schema=_PE_DDL,
+            part_col="p", manifest=_PE_STATS,
+        )
         _pe_write_spec(root, version, spec_id, transform)
         assert _commit_cas(root, parent, version)
-        return rows
+        man_dir = os.path.join(root, "manifest", f"v={version}")
+        return {r["p"]: r for r in pq.read_table(man_dir).to_pylist()}
 
-    rows1 = _publish(
+    man1 = _publish(
         e.where(F.col("dom") <= _PE_DOM_SPLIT)
         .select("event_id", "user_id", "day")
         .withColumn("p", F.col("day")),
         1, 1, "identity", None,
     )
-    rows2 = _publish(
+    man2 = _publish(
         e.where(F.col("dom") > _PE_DOM_SPLIT)
         .select("event_id", "user_id", "day", F.col("ym").alias("p")),
         2, 2, "month", 1,
@@ -5378,34 +5303,6 @@ def pipeline_partition_evolution(
 
     dirs1, dirs2 = _pe_dirs(root, 1), _pe_dirs(root, 2)
     spec1, spec2 = _pe_read_spec(root, 1), _pe_read_spec(root, 2)
-
-    # planning reads: manifest-sized (one row per partition dir). The
-    # committer path already holds the committed manifests' rows;
-    # only the scale fallback re-reads them through Spark.
-    man1 = (
-        {r["p"]: r for r in rows1}
-        if rows1 is not None
-        else {
-            r["p"]: r
-            for r in spark.read.parquet(
-                os.path.join(root, "manifest", "v=1")
-            ).collect()
-        }
-        if dirs1
-        else {}
-    )
-    man2 = (
-        {r["p"]: r for r in rows2}
-        if rows2 is not None
-        else {
-            r["p"]: r
-            for r in spark.read.parquet(
-                os.path.join(root, "manifest", "v=2")
-            ).collect()
-        }
-        if dirs2
-        else {}
-    )
 
     probe1 = min((r["min_day"] for r in man1.values()), default=None)
     probe2 = max((r["max_day"] for r in man2.values()), default=None)
@@ -5421,35 +5318,28 @@ def pipeline_partition_evolution(
             F.count(F.lit(1)).cast("long").alias("n"),
         )
 
+    def _read(version, parts=None):
+        data_dir = os.path.join(root, "data", f"v={version}")
+        if parts is None:
+            return read_parquet_or_empty(spark, data_dir, _PE_DDL)
+        return _read_parts(spark, data_dir, _PE_DDL, "p", parts)
+
     branches = [
-        _cnt(_pe_read(spark, root, 1), "v1"),
-        _cnt(_pe_read(spark, root, 2), "v2"),
-        _cnt(
-            _pe_read(spark, root, 1).unionByName(_pe_read(spark, root, 2)),
-            "merged",
-        ),
+        _cnt(_read(1), "v1"),
+        _cnt(_read(2), "v2"),
+        _cnt(_read(1).unionByName(_read(2)), "merged"),
     ]
     if probe1 is not None:
         hit1 = _pe_prune(dirs1, spec1, probe1)
         branches.append(
-            _cnt(
-                _pe_read(spark, root, 1, hit1).where(
-                    F.col("day") == probe1
-                ),
-                "fine",
-            )
+            _cnt(_read(1, hit1).where(F.col("day") == probe1), "fine")
         )
     else:
         hit1 = []
     if probe2 is not None:
         hit2 = _pe_prune(dirs2, spec2, probe2)
         branches.append(
-            _cnt(
-                _pe_read(spark, root, 2, hit2).where(
-                    F.col("day") == probe2
-                ),
-                "resid",
-            )
+            _cnt(_read(2, hit2).where(F.col("day") == probe2), "resid")
         )
         scan_n = int(sum(man2[p]["n_rows"] for p in hit2))
         scan_days = int(sum(man2[p]["n_days"] for p in hit2))
@@ -5824,7 +5714,7 @@ def _read_clone(
             if d == 0
             else os.path.join(clone_root, "data", f"v={d}")
         )
-        df = read_parquet_or_empty(spark, path, _rel_schema())
+        df = read_parquet_or_empty(spark, path, _REL_SCHEMA_DDL)
         out = df if out is None else out.unionAll(df)
     return out
 

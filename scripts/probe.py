@@ -42,7 +42,9 @@ _PIPELINE_HELPERS = (
     "_publish_version",
     "_commit_mor_delete",
     "_read_mor",
-    "_shard_manifest",
+    "_local_manifest",
+    "_spark_manifest",
+    "_read_parts",
     "_write_layout",
     "_append_commit_log",
 )

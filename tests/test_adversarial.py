@@ -171,7 +171,7 @@ def test_commit_cas_data_loser_cannot_clobber_winner(tmp_path):
     the same proposed version and must be refused with A's committed
     bytes untouched."""
     from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _commit_cas_data,
+        _commit_cas,
         _resolve_current,
         _storm_read_raw,
         _storm_stage_dir,
@@ -183,7 +183,7 @@ def test_commit_cas_data_loser_cannot_clobber_winner(tmp_path):
     b = os.path.join(root, "data", ".stage-b")
     _storm_stage_dir(a, [(1, 1, "a", 0)])
     _storm_stage_dir(b, [(99, 1, "b", 1)])
-    assert _commit_cas_data(root, None, 1, a) is True
-    assert _commit_cas_data(root, None, 1, b) is False  # stale base
+    assert _commit_cas(root, None, 1, staged_dir=a) is True
+    assert _commit_cas(root, None, 1, staged_dir=b) is False  # stale base
     assert _resolve_current(root) == 1
     assert _storm_read_raw(root, 1) == [(1, 1, "a", 0)]

@@ -342,37 +342,6 @@ def test_cdf_classes_match_plain_python(spark):
 
 
 # ---------------------------------------------------------------------------
-# Manifest pruning: the skipped shards provably contain no matches
-# ---------------------------------------------------------------------------
-def test_manifest_bounds_are_sound_for_pruning(spark):
-    from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _PRUNE_HI,
-        _PRUNE_LO,
-        _shard_manifest_stats,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    packed = _pack_where(docs, "doc_id % 2 = 0", _COMPACT_SMALL_BUDGET)
-    pdf = packed.toPandas()
-    if pdf.empty:
-        pytest.skip("empty fixture")
-    man = _shard_manifest_stats(packed).toPandas()
-    pruned_out = set(
-        man[(man["max_doc"] < _PRUNE_LO) | (man["min_doc"] > _PRUNE_HI)][
-            "shard"
-        ]
-    )
-    # no row in a pruned-out shard may fall inside the range
-    hits = pdf[(pdf["doc_id"] >= _PRUNE_LO) & (pdf["doc_id"] <= _PRUNE_HI)]
-    assert set(hits["shard"]).isdisjoint(pruned_out)
-    # bounds are exact, not conservative-loose: every kept shard
-    # really overlaps the range (packing clusters by doc_id)
-    kept = man[~man["shard"].isin(pruned_out)]
-    for r in kept.itertuples():
-        assert r.max_doc >= _PRUNE_LO and r.min_doc <= _PRUNE_HI
-
-
-# ---------------------------------------------------------------------------
 # Log-tail consumer offsets
 # ---------------------------------------------------------------------------
 def test_consumer_offset_replay_is_deterministic(spark, tmp_path):

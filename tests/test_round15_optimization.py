@@ -1,13 +1,14 @@
 """Round-15 optimization invariants.
 
-The r15 round again changed HOW internals produce bytes, never WHAT any
-query computes. These tests pin the equivalences the optimizations rely
-on:
+The r15 round changed HOW internals produce bytes, never WHAT any query
+computes. These tests pin the equivalences the optimizations rely on:
 
-- ``_local_shard_manifest`` (the committer-side manifest fold) must be
-  bit-identical to the Spark ``_shard_manifest`` aggregate over the
-  same staged files — including null-token rows (digest/sum skip
-  semantics) and the hive ``part=`` layout of the manifest write.
+- the manifest builder's local form (``_local_manifest``, the
+  committer-side pyarrow fold) must equal its Spark form
+  (``_spark_manifest``) over the same staged files for every aggregate
+  kind and staging layout — or fall back, logging why, before reading
+  any table — and the manifest ``_stage_version`` writes must read back
+  as the Spark form (with the shard manifest's ``part=`` layout).
 - the fused single-scan matview deltas must equal the per-slice
   ``_mv_agg`` frames they replaced.
 - the argmin-as-aggregate (min over struct(d, cell)) must equal the
@@ -18,6 +19,8 @@ on:
 
 from __future__ import annotations
 
+import logging
+import math
 import os
 
 import pytest
@@ -55,72 +58,26 @@ def _stage_sample(spark, tmp_path, rows):
     )
 
 
-_SAMPLE = [
-    (1, 10, "a", 0),
-    (2, 20, "b", 0),
-    (3, None, "c", 1),  # null tokens: skipped by sum AND digest
-    (4, 7, "d", 5),     # part = 5 % 4 = 1
-    (None, 9, "e", 2),  # null doc_id: digest-null row, counted in n_docs
-    (6, 0, "f", 2),
-]
-
-
-def test_local_manifest_matches_spark_aggregate(spark, tmp_path):
-    from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _local_shard_manifest,
-        _manifest_schema,
-        _rel_schema,
-        _shard_manifest,
-    )
-
-    _root, data_dir, man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
-    want = {
-        r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
-        for r in _shard_manifest(staged).collect()
-    }
-    got_rows = _local_shard_manifest(data_dir)
-    assert got_rows is not None
-    got = {
-        r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
-        for r in got_rows
-    }
-    assert got == want
-    for r in got_rows:
-        assert r["part"] == r["shard"] % 4  # non-negative shards here
-    # and the manifest actually written by _stage_version reads back
-    # identically through the protocol reader
-    back = read_parquet_or_empty(spark, man_dir, _manifest_schema())
-    assert {
-        r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
-        for r in back.collect()
-    } == want
-    # hive layout: one part=N dir per distinct part value
-    parts = sorted(
-        n for n in os.listdir(man_dir) if n.startswith("part=")
-    )
-    assert parts == sorted({f"part={r['part']}" for r in got_rows})
-
-
 def test_local_manifest_zero_rows_writes_no_partitions(spark, tmp_path):
     _root, _data_dir, man_dir = _stage_sample(spark, tmp_path, [])
     assert [n for n in os.listdir(man_dir) if n.startswith("part=")] == []
 
 
-def _write_pe_sample(spark, data_dir, rows):
-    """Write partition-evolution rows (event_id, user_id, day, p) in the
-    hive p=… layout the pipeline stages them in."""
-    from dock_financial_data_pipelines_spark.plans.pipeline import _PE_DDL
-    from dock_financial_data_pipelines_spark.sources.sinks import (
-        write_partitioned,
-    )
+_LOG = "dock_fdp_spark.tableformat"
 
-    df = spark.createDataFrame(rows, _PE_DDL)
-    write_partitioned(df.repartition("p"), data_dir, "p")
-    return data_dir
+_FLAT_ROWS = [
+    (1, 10, "a", 0),
+    (2, 20, "b", 0),
+    (3, None, "c", 1),  # null tokens: skipped by sum, distinct and digest
+    (4, 7, "d", 5),     # part = 5 % 4 = 1
+    (None, 9, "e", 2),  # null doc_id: skipped by min/max and digest
+    (6, 0, "f", 2),
+    (7, 7, "g", -3),    # negative shards: part = -3 (Java remainder)
+    (8, None, "h", -3),
+    (9, 3, "i", -4),
+]
 
-
-_PE_SAMPLE = [
+_PE_ROWS = [
     (1, 10, "1998-01-01", "1998-01-01"),
     (2, 11, "1998-01-01", "1998-01-01"),
     (3, 12, "1998-01-02", "1998-01-02"),
@@ -128,69 +85,225 @@ _PE_SAMPLE = [
     (5, 14, "1998-02-03", "1998-02"),  # distinct/min/max
 ]
 
+# every aggregate kind, per schema (the partition-evolution rows carry
+# no doc_id/tokens, so the digest kind is covered by the shard layouts)
+_REL_KINDS = (
+    ("n", "count", None),
+    ("s", "sum", "tokens"),
+    ("lo", "min", "doc_id"),
+    ("hi", "max", "doc_id"),
+    ("nd", "count_distinct", "tokens"),
+    ("dg", "digest", None),
+)
+_PE_KINDS = (
+    ("n", "count", None),
+    ("s", "sum", "event_id"),
+    ("lo", "min", "day"),
+    ("hi", "max", "day"),
+    ("nd", "count_distinct", "day"),
+)
 
-def test_local_manifest_row_cap_falls_back(tmp_path, spark, monkeypatch):
-    """Both committer-side builders check the row cap from the parquet
-    footers and fall back BEFORE reading any table."""
-    import pyarrow.parquet as pq
+# layout -> the fallback reason the local form must log (None: it must
+# not fall back)
+_LAYOUTS = {
+    "flat": None,
+    "flat_empty": None,
+    "hive_shard": None,
+    "hive_p": None,
+    "hive_p_null": "default-partition directory",
+    "hive_p_escaped": "escaped partition directory",
+    "flat_null_shard": "null partition",
+    "over_byte_cap": "byte cap",
+    "over_row_cap": "row cap",
+}
+# reasons known from the file listing and footers alone
+_READ_FREE = {
+    "byte cap",
+    "row cap",
+    "default-partition directory",
+    "escaped partition directory",
+}
 
-    from dock_financial_data_pipelines_spark.plans import pipeline as pl
 
-    _root, data_dir, _man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
-    pe_dir = _write_pe_sample(spark, str(tmp_path / "pe_data"), _PE_SAMPLE)
+def _stage_layout(spark, sf_dir, root, layout, pl):
+    """Stage ``layout`` as version 1 through ``_stage_version``; return
+    (schema, part_col, production aggregate list, every-kind list,
+    hive)."""
+    if layout.startswith("hive_p"):
+        rows = list(_PE_ROWS)
+        if layout == "hive_p_null":
+            rows.append((6, 15, "1998-03-01", None))
+        if layout == "hive_p_escaped":
+            rows.append((7, 16, "1998-03-02", "1998:03"))
+        pl._stage_version(
+            spark, spark.createDataFrame(rows, pl._PE_DDL), root, 1,
+            layout="hive", schema=pl._PE_DDL, part_col="p",
+            manifest=pl._PE_STATS,
+        )
+        return pl._PE_DDL, "p", pl._PE_STATS, _PE_KINDS, True
+    if layout == "hive_shard":
+        docs = load(spark, sf_dir, "documents")
+        packed = pl._pack_where(
+            docs, "doc_id % 2 = 0", pl._COMPACT_SMALL_BUDGET
+        )
+        pl._stage_version(
+            spark, packed, root, 1, layout="hive", manifest=pl._RANGE_STATS
+        )
+        return pl._REL_SCHEMA_DDL, "shard", pl._RANGE_STATS, _REL_KINDS, True
+    rows = [] if layout == "flat_empty" else list(_FLAT_ROWS)
+    if layout == "flat_null_shard":
+        rows.append((10, 1, "j", None))
+    # file_rows=2: small-file debris, many files per shard
+    pl._stage_version(
+        spark, spark.createDataFrame(rows, pl._REL_SCHEMA_DDL), root, 1,
+        file_rows=2,
+    )
+    return pl._REL_SCHEMA_DDL, "shard", pl._SHARD_STATS, _REL_KINDS, False
 
-    def no_read(*_a, **_kw):
-        raise AssertionError("table read past the row cap")
 
-    monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
-    monkeypatch.setattr(pq, "ParquetDataset", no_read)
-    monkeypatch.setattr(pq, "read_table", no_read)
-    assert pl._local_shard_manifest(data_dir) is None
-    assert pl._pe_local_manifest(pe_dir) is None
-
-
-def _pe_stats(rows):
+def _keyed(rows, part_col):
     return {
-        r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
+        r[part_col]: tuple(v for k, v in r.items() if k != part_col)
         for r in rows
     }
 
 
-def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
-    from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _PE_DDL,
-        _pe_local_manifest,
-    )
+def _no_table_reads(monkeypatch):
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
-    def spark_stats(data_dir):
-        return _pe_stats(
-            read_parquet_or_empty(spark, data_dir, _PE_DDL)
-            .groupBy("p")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.countDistinct("day").cast("long").alias("n_days"),
-                F.min("day").alias("min_day"),
-                F.max("day").alias("max_day"),
-            )
-            .collect()
+    def no_read(*_a, **_kw):
+        raise AssertionError("table read before the fallback")
+
+    monkeypatch.setattr(ds, "dataset", no_read)
+    monkeypatch.setattr(pq, "ParquetDataset", no_read)
+    monkeypatch.setattr(pq, "read_table", no_read)
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_manifest_local_form_matches_spark_form(
+    spark, sf_dir, tmp_path, monkeypatch, caplog, layout
+):
+    """The one differential test of the manifest builder: for every
+    aggregate kind the local form equals the Spark form over the
+    read-back, or falls back (logging the reason) without reading any
+    table; and the manifest _stage_version wrote reads back as the
+    Spark form of its aggregate list."""
+    from dock_financial_data_pipelines_spark.plans import pipeline as pl
+
+    caplog.set_level(logging.INFO, logger=_LOG)
+    if layout == "over_byte_cap":
+        monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_BYTES", 1)
+    if layout == "over_row_cap":
+        monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
+    root = str(tmp_path / "root")
+    schema, part_col, stats, kinds, hive = _stage_layout(
+        spark, sf_dir, root, layout, pl
+    )
+    data_dir = os.path.join(root, "data", "v=1")
+    man_dir = os.path.join(root, "manifest", "v=1")
+    staged = read_parquet_or_empty(spark, data_dir, schema)
+    want = _keyed(
+        [r.asDict() for r in pl._spark_manifest(staged, part_col, kinds)
+         .collect()],
+        part_col,
+    )
+    reason = _LAYOUTS[layout]
+    staging_logs = [r.getMessage() for r in caplog.records if r.name == _LOG]
+    caplog.clear()
+    with monkeypatch.context() as m:
+        if reason in _READ_FREE:
+            _no_table_reads(m)
+        got = pl._local_manifest(data_dir, schema, part_col, kinds, hive)
+    logs = [r.getMessage() for r in caplog.records if r.name == _LOG]
+    if reason is None:
+        assert logs == [] and staging_logs == []
+        assert _keyed(got, part_col) == want
+    else:
+        assert got is None
+        assert len(logs) == 1 and reason in logs[0]
+        # staging fell back the same way and wrote the Spark form
+        assert len(staging_logs) == 1 and reason in staging_logs[0]
+
+    # the manifest _stage_version wrote reads back as the Spark form
+    man = read_parquet_or_empty(
+        spark, man_dir, pl._manifest_ddl(schema, part_col, stats)
+    )
+    assert _keyed([r.asDict() for r in man.drop("part").collect()],
+                  part_col) == _keyed(
+        [r.asDict() for r in pl._spark_manifest(staged, part_col, stats)
+         .collect()],
+        part_col,
+    )
+    if stats is pl._SHARD_STATS and want and None not in want:
+        # the shard manifest's part = shard % 4 (Java remainder) dirs
+        assert sorted(
+            n for n in os.listdir(man_dir) if n.startswith("part=")
+        ) == sorted({f"part={int(math.fmod(s, 4))}" for s in want})
+
+    if layout == "flat_empty":
+        assert want == {} and got == []
+    if layout == "hive_p_null":
+        # p=__HIVE_DEFAULT_PARTITION__ reads back as NULL in Spark
+        assert os.path.isdir(
+            os.path.join(data_dir, "p=__HIVE_DEFAULT_PARTITION__")
         )
+        assert None in want
+    if layout == "hive_p_escaped":
+        assert "1998:03" in want
+    if layout == "hive_shard":
+        _assert_bounds_sound_for_pruning(staged.toPandas(), got)
 
-    data_dir = _write_pe_sample(spark, str(tmp_path / "pe_data"), _PE_SAMPLE)
-    got_rows = _pe_local_manifest(data_dir)
-    assert got_rows is not None
-    assert _pe_stats(got_rows) == spark_stats(data_dir)
 
-    # A null p lands in p=__HIVE_DEFAULT_PARTITION__, which the Spark
-    # reader maps back to NULL: the local fold must fall back rather
-    # than report the literal directory name.
-    null_dir = _write_pe_sample(
-        spark,
-        str(tmp_path / "pe_null"),
-        _PE_SAMPLE + [(6, 15, "1998-03-01", None)],
+def _assert_bounds_sound_for_pruning(pdf, man_rows):
+    """Manifest pruning: the skipped shards provably contain no
+    matches, and the bounds are exact (packing clusters by doc_id)."""
+    from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _PRUNE_HI,
+        _PRUNE_LO,
     )
-    assert os.path.isdir(os.path.join(null_dir, "p=__HIVE_DEFAULT_PARTITION__"))
-    assert None in spark_stats(null_dir)
-    assert _pe_local_manifest(null_dir) is None
+
+    if pdf.empty:
+        pytest.skip("empty fixture")
+    pruned_out = {
+        r["shard"]
+        for r in man_rows
+        if r["hi"] < _PRUNE_LO or r["lo"] > _PRUNE_HI
+    }
+    hits = pdf[(pdf["doc_id"] >= _PRUNE_LO) & (pdf["doc_id"] <= _PRUNE_HI)]
+    assert len(hits) and set(hits["shard"]).isdisjoint(pruned_out)
+    for r in man_rows:
+        if r["shard"] not in pruned_out:
+            assert r["hi"] >= _PRUNE_LO and r["lo"] <= _PRUNE_HI
+
+
+def test_local_manifest_row_cap_falls_back(
+    tmp_path, spark, monkeypatch, caplog
+):
+    """The builder checks the row cap from the parquet footers and
+    falls back BEFORE reading any table, for flat and hive layouts,
+    emitting one record that names the reason."""
+    from dock_financial_data_pipelines_spark.plans import pipeline as pl
+
+    flat_root, pe_root = str(tmp_path / "flat"), str(tmp_path / "pe")
+    _stage_layout(spark, None, flat_root, "flat", pl)
+    _stage_layout(spark, None, pe_root, "hive_p", pl)
+
+    caplog.set_level(logging.INFO, logger=_LOG)
+    caplog.clear()
+    monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
+    _no_table_reads(monkeypatch)
+    assert pl._local_manifest(
+        os.path.join(flat_root, "data", "v=1"), pl._REL_SCHEMA_DDL,
+        "shard", pl._SHARD_STATS, False,
+    ) is None
+    assert pl._local_manifest(
+        os.path.join(pe_root, "data", "v=1"), pl._PE_DDL, "p",
+        pl._PE_STATS, True,
+    ) is None
+    records = [r for r in caplog.records if r.name == _LOG]
+    assert len(records) == 2
+    assert all("row cap" in r.getMessage() for r in records)
 
 
 def test_matview_fused_deltas_match_mv_agg(spark, sf_dir):
